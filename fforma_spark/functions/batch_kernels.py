@@ -872,8 +872,10 @@ def _feature_matrix_block(
     out["hurst"] = hurst
     out["nonzero_ratio"] = (X != 0).mean(axis=1)
 
-    # classical additive decomposition (n >= 3 guaranteed by
-    # MIN_BATCH_LEN): spike / linearity / curvature / e_acf / peak
+    # classical additive decomposition: spike / linearity / curvature /
+    # e_acf / peak. At n == 2 (MIN_BATCH_LEN) the trend MA's valid span
+    # b - a is at most 1, so every span gate below yields the zeros the
+    # scalar path sets for n < 3.
     t_hat, s_hat, rem, (a, b) = classical_additive_matrix(X, s)
     span = b - a
     if span >= 3:

@@ -18,6 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from fforma_spark.util import sql_ident as _q
+
 
 def _arr(cols: list[str]):
     return F.array(*[F.col(c) for c in cols])
@@ -52,21 +54,23 @@ def ensemble_median(forecasts: DataFrame, model_cols: list[str]) -> DataFrame:
 def softmin_weights(errors: DataFrame, loss_cols: list[str]) -> DataFrame:
     """Per-series softmax(-loss) weights
     (fforma/meta_learner/_basics.py:66-103). Numerically stabilized by
-    subtracting the row max of (-loss) — identical weights."""
-    neg = [(-F.col(c)) for c in loss_cols]
-    mx = F.greatest(*neg) if len(neg) > 1 else neg[0]
-    exps = [F.exp(e - mx) for e in neg]
-    tot = exps[0]
-    for e in exps[1:]:
-        tot = tot + e
-    out = errors.select(
-        "doc_id",
-        *[
-            (e / tot).alias(f"w_{c}")
-            for c, e in zip(loss_cols, exps)
-        ],
+    subtracting the row max of (-loss) — identical weights.
+
+    Staged as row max, exps, total, weights — one projection each, so
+    every term appears once in the plan (O(M) nodes, not O(M²)):
+    CollapseProject never inlines a non-cheap expression used twice."""
+    q = [_q(c) for c in loss_cols]
+    mx = f"greatest({', '.join(f'-{c}' for c in q)})" if len(q) > 1 else f"-{q[0]}"
+    exps = [f"_e{i}" for i in range(len(q))]
+    return (
+        errors.selectExpr("doc_id", *q, f"{mx} AS _mx")
+        .selectExpr("doc_id", *[f"exp(-{c} - _mx) AS {e}" for c, e in zip(q, exps)])
+        .selectExpr("*", f"{' + '.join(exps)} AS _tot")
+        .selectExpr(
+            "doc_id",
+            *[f"{e} / _tot AS {_q(f'w_{c}')}" for c, e in zip(loss_cols, exps)],
+        )
     )
-    return out
 
 
 def best_model_weights(errors: DataFrame, loss_cols: list[str]) -> DataFrame:
@@ -108,10 +112,10 @@ def weighted_rollup(
     """
     w = F.broadcast(weights) if broadcast_weights else weights
     joined = forecasts.join(w, "doc_id")
-    expr = F.lit(0.0)
-    for mc, lc in zip(model_cols, loss_cols):
-        expr = expr + F.col(f"w_{lc}") * F.col(mc)
-    return joined.select("doc_id", "pos", expr.alias("y_hat"))
+    # 0.0D starts the sum as a double; a bare SQL 0.0 is a decimal literal
+    terms = [f"{_q(f'w_{lc}')} * {_q(mc)}" for mc, lc in zip(model_cols, loss_cols)]
+    y_hat = " + ".join(["0.0D", *terms])
+    return joined.selectExpr("doc_id", "pos", f"{y_hat} AS y_hat")
 
 
 def contribution_to_error(

@@ -260,7 +260,8 @@ def tsb_matrix(Y: np.ndarray, h: int) -> np.ndarray:
     first-occurrence argmin lands in the first alpha block at the first
     best beta — reproduced here by argmin over the beta axis alone.
     """
-    assert (Y > 0).all(), "tsb_matrix requires strictly-positive rows"
+    if not (Y > 0).all():
+        raise ValueError("tsb_matrix requires strictly-positive rows")
     B, n = Y.shape
     b_grid = np.array([0.01, 0.02, 0.03, 0.05, 0.1, 0.2, 0.3])
     g = b_grid.size

@@ -19,29 +19,36 @@ JVM-side with whole-stage codegen (no UDFs).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
+
+from fforma_spark.util import sql_ident as _q
+
+# One SQL text per (metric, model) output column, parsed by ONE F.expr:
+# every Column-API call records its Python call site (~1-2 ms of
+# driver time each), so a per-model Column tree costs ~10 of them.
+# Operand order is the Column API's (``200 * col`` is ``col * 200``).
+_AGG_SQL = {
+    "mse": "avg((y - {c}) * (y - {c}))",
+    "mae": "avg(abs(y - {c}))",
+    "mape": "avg(CASE WHEN abs(y) != 0 THEN abs(y - {c}) / abs(y) END) * 100",
+    "smape": "avg(CASE WHEN abs(y) + abs({c}) != 0"
+    " THEN abs(y - {c}) / (abs(y) + abs({c})) END) * 200",
+    "mase": "try_divide(avg(abs(y - {c})) * 100, first(mase_scale))",
+}
+_MODEL_METRICS = ("mse", "mae", "mape", "smape")
 
 
-def _err(model_col: str):
-    return F.col("y") - F.col(model_col)
+def _agg(metric: str, model_col: str, prefix: str | None = None) -> Column:
+    """``<prefix>_<metric>`` of one model column; the prefix defaults to
+    the column name minus its ``_forec`` suffix."""
+    p = model_col.removesuffix("_forec") if prefix is None else prefix
+    sql = _AGG_SQL[metric].format(c=_q(model_col))
+    return F.expr(f"{sql} AS {_q(f'{p}_{metric}')}")
 
 
 def metric_aggs(model_col: str, prefix: str) -> list:
     """mse/mae/mape/smape aggregate expressions for one model column."""
-    e = _err(model_col)
-    abs_e = F.abs(e)
-    scale_mape = F.abs(F.col("y"))
-    scale_smape = F.abs(F.col("y")) + F.abs(F.col(model_col))
-    return [
-        F.avg(e * e).alias(f"{prefix}_mse"),
-        F.avg(abs_e).alias(f"{prefix}_mae"),
-        (100 * F.avg(F.when(scale_mape != 0, abs_e / scale_mape))).alias(
-            f"{prefix}_mape"
-        ),
-        (200 * F.avg(F.when(scale_smape != 0, abs_e / scale_smape))).alias(
-            f"{prefix}_smape"
-        ),
-    ]
+    return [_agg(m, model_col, prefix) for m in _MODEL_METRICS]
 
 
 def evaluate_models(
@@ -53,10 +60,9 @@ def evaluate_models(
     sort-merge on co-partitioned keys, the agg is map-side partial).
     """
     joined = truth.join(forecasts, ["doc_id", "pos"], "left")
-    aggs = []
-    for mc in model_cols:
-        aggs.extend(metric_aggs(mc, mc.removesuffix("_forec")))
-    return joined.groupBy("doc_id").agg(*aggs)
+    return joined.groupBy("doc_id").agg(
+        *[_agg(m, mc) for mc in model_cols for m in _MODEL_METRICS]
+    )
 
 
 def mase_scale(train_panel: DataFrame, seasonality_expr) -> DataFrame:
@@ -97,39 +103,21 @@ def evaluate_with_owa(
     joined = truth.join(forecasts, ["doc_id", "pos"], "left").join(
         scale_df, "doc_id"
     )
-    aggs = []
-    for mc in model_cols:
-        p = mc.removesuffix("_forec")
-        e = F.abs(_err(mc))
-        scale_smape = F.abs(F.col("y")) + F.abs(F.col(mc))
-        aggs.append(
-            (200 * F.avg(F.when(scale_smape != 0, e / scale_smape))).alias(
-                f"{p}_smape"
-            )
-        )
-        aggs.append(
-            F.try_divide(100 * F.avg(e), F.first("mase_scale")).alias(
-                f"{p}_mase"
-            )
-        )
-    per_series = joined.groupBy("doc_id").agg(*aggs)
+    per_series = joined.groupBy("doc_id").agg(
+        *[_agg(m, mc) for mc in model_cols for m in ("smape", "mase")]
+    )
     if bench is None:
         return per_series
-    bench_p = bench.removesuffix("_forec")
-    for mc in model_cols:
-        p = mc.removesuffix("_forec")
-        # NULL (0/0, e.g. constant series where every model is exact)
-        # mirrors the reference's NaN, handled downstream by the
-        # fillna(0) convention (fforma/experiments/base/common.py:139)
-        per_series = per_series.withColumn(
-            f"{p}_owa",
-            (
-                F.try_divide(F.col(f"{p}_mase"), F.col(f"{bench_p}_mase"))
-                + F.try_divide(F.col(f"{p}_smape"), F.col(f"{bench_p}_smape"))
-            )
-            / 2,
-        )
-    return per_series
+    b = bench.removesuffix("_forec")
+    # NULL (0/0, e.g. constant series where every model is exact)
+    # mirrors the reference's NaN, handled downstream by the
+    # fillna(0) convention (fforma/experiments/base/common.py:139)
+    prefixes = [mc.removesuffix("_forec") for mc in model_cols]
+    return per_series.selectExpr("*", *[
+        f"(try_divide({_q(p + '_mase')}, {_q(b + '_mase')}) + try_divide("
+        f"{_q(p + '_smape')}, {_q(b + '_smape')})) / 2 AS {_q(p + '_owa')}"
+        for p in prefixes
+    ])
 
 
 def group_weighted_summary(
@@ -172,13 +160,4 @@ def evaluate_models_per_obs(
     evaluate_models_per_obs). One global aggregate per model column;
     Catalyst collapses it to a single partial-agg + 1-row final."""
     joined = truth.join(forecasts, ["doc_id", "pos"], "left")
-    aggs = []
-    for mc in model_cols:
-        p = mc.removesuffix("_forec")
-        e = F.abs(_err(mc))
-        sc = F.abs(F.col("y")) + F.abs(F.col(mc))
-        aggs.append(
-            (200 * F.avg(F.when(sc != 0, e / sc))).alias(f"{p}_smape")
-        )
-        aggs.append(F.avg(e).alias(f"{p}_mae"))
-    return joined.agg(*aggs)
+    return joined.agg(*[_agg(m, mc) for mc in model_cols for m in ("smape", "mae")])

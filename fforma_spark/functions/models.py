@@ -128,7 +128,8 @@ def _forecast_batches(
         h_arr = np.asarray(kept_h, dtype=np.int64)
         offsets = np.concatenate([[0], np.cumsum(h_arr)])
         total = int(offsets[-1])
-        out_cols = {c: np.empty(total, dtype=np.float64) for c in FORECAST_COLS}
+        # NaN, not np.empty: a model the kernel does not return stays NaN
+        out_cols = {c: np.full(total, np.nan) for c in FORECAST_COLS}
         # pool the optimized-alpha golden-section across ALL fast
         # groups (one padded recurrence sweep per iteration instead of
         # one per length group — forecast_batch.optimize_alpha_ragged)
@@ -200,6 +201,20 @@ def base_forecasts(
     return src.mapInPandas(gen, FORECASTS_SCHEMA)
 
 
+def _horizon(h_by_prefix: dict[str, int] | None, default_h: int):
+    """Per-doc horizon from the doc_id prefix, as ONE CASE expression."""
+    from pyspark.sql import functions as F
+
+    from fforma_spark.util import sql_str
+
+    hmap = HORIZON_BY_PREFIX if h_by_prefix is None else h_by_prefix
+    whens = "".join(
+        f" WHEN substring(doc_id, 1, 1) = {sql_str(p)} THEN {h}"
+        for p, h in hmap.items()
+    )
+    return F.expr(f"CASE{whens} ELSE {default_h} END" if whens else str(default_h))
+
+
 def holdout_truth(seq_df: DataFrame, h_by_prefix: dict[str, int] | None = None,
                   default_h: int = 8) -> DataFrame:
     """The last-h actuals per doc as a long panel (doc_id, pos, y) —
@@ -207,12 +222,8 @@ def holdout_truth(seq_df: DataFrame, h_by_prefix: dict[str, int] | None = None,
     pure array ops (slice on the wide table, no window shuffle)."""
     from pyspark.sql import functions as F
 
-    hmap = HORIZON_BY_PREFIX if h_by_prefix is None else h_by_prefix
-    h_expr = F.lit(default_h)
-    for pfx, h in hmap.items():
-        h_expr = F.when(F.substring("doc_id", 1, 1) == pfx, h).otherwise(h_expr)
     return (
-        seq_df.withColumn("_h", h_expr)
+        seq_df.withColumn("_h", _horizon(h_by_prefix, default_h))
         .filter(F.col("n_tok") > F.col("_h"))
         .select(
             "doc_id",
@@ -230,12 +241,8 @@ def train_split(seq_df: DataFrame, h_by_prefix: dict[str, int] | None = None,
     wide table — slice() on arrays, zero shuffle."""
     from pyspark.sql import functions as F
 
-    hmap = HORIZON_BY_PREFIX if h_by_prefix is None else h_by_prefix
-    h_expr = F.lit(default_h)
-    for pfx, h in hmap.items():
-        h_expr = F.when(F.substring("doc_id", 1, 1) == pfx, h).otherwise(h_expr)
     return (
-        seq_df.withColumn("_h", h_expr)
+        seq_df.withColumn("_h", _horizon(h_by_prefix, default_h))
         .filter(F.col("n_tok") > F.col("_h"))
         .select(
             "doc_id",

@@ -24,6 +24,29 @@ def _default_shuffle_partitions(master: str, cpus: int) -> int:
     return cpus
 
 
+def _host_memory_bytes() -> int:
+    """Physical memory (MemTotal, via sysconf), capped by a cgroup v2 or
+    v1 memory limit when one is set."""
+    limit = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in (
+        "/sys/fs/cgroup/memory.max",
+        "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+    ):
+        try:
+            with open(path) as f:
+                limit = min(limit, int(f.read()))
+        except (OSError, ValueError):  # no such cgroup, or "max"
+            pass
+    return limit
+
+
+def _default_driver_mem() -> str:
+    """A quarter of the host's memory, 1-16 GiB: the heap is pre-touched
+    at start, and the Python workers (one per core) need the rest."""
+    mb = _host_memory_bytes() // 4 // 2**20
+    return f"{max(1024, min(16384, mb))}m"
+
+
 def get_spark(
     app_name: str = "fforma_spark",
     master: str | None = None,
@@ -34,10 +57,14 @@ def get_spark(
 
     Under spark-submit (detected via the py4j gateway env), the
     submitted ``--master`` wins; as a plain python process ``master``
-    defaults to ``local[$SPARK_GRAFT_CPUS]`` (32). Explicit arguments
-    override both.
+    defaults to ``local[$SPARK_GRAFT_CPUS]``. Explicit arguments
+    override both. Unset, ``SPARK_GRAFT_CPUS`` is the number of cores
+    this process may run on and ``SPARK_GRAFT_DRIVER_MEM`` is
+    :func:`_default_driver_mem`.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(
+        os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    )
     # Under spark-submit the driver JVM already exists (py4j gateway
     # env vars are set) and carries the submitted --master; forcing
     # local[N] here would silently turn a cluster job into a local
@@ -47,7 +74,7 @@ def get_spark(
     if master is None and not under_submit:
         master = f"local[{cpus}]"
 
-    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem()
     builder = (
         SparkSession.builder.appName(app_name)
         # Single-JVM local mode: many task threads contend on the

@@ -85,6 +85,16 @@ def exact_quantile_sql(arr: str, n: str, q: float) -> str:
     return f"({lo} + ({hi} - {lo}) * ({idx} - floor({idx})))"
 
 
+def sql_ident(name: str) -> str:
+    """Backtick-quoted Spark SQL identifier for a generated column name."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_str(s: str) -> str:
+    """Spark SQL string literal (backslash escapes are on by default)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def ensure_parallelism(df, min_parts: int | None = None):
     """Repartition up when the scan produced too few splits.
 

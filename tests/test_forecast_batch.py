@@ -142,6 +142,33 @@ def test_empty_batch():
     assert list(got.columns) == ["doc_id", "pos", *FORECAST_COLS]
 
 
+def test_model_missing_from_kernel_output_is_nan(monkeypatch):
+    """A model the batched kernel does not return comes out NaN, never
+    as whatever memory the output column was allocated from."""
+    import fforma_spark.functions.forecast_batch as FB
+
+    real = FB.forecast_group_matrix
+
+    def without_tsb(*args, **kwargs):
+        out = real(*args, **kwargs)
+        del out["tsb"]
+        return out
+
+    monkeypatch.setattr(FB, "forecast_group_matrix", without_tsb)
+    rng = np.random.default_rng(14)
+    ids = [f"{i % 10}{i}" for i in range(64)]
+    toks = [rng.integers(1, 15, size=int(rng.integers(9, 40))) for _ in ids]
+    pdf = pd.DataFrame({"doc_id": ids, "tokens": toks})
+    np.full(64 * 8, 7.0)  # freed at once: non-NaN bytes for reuse
+    got = next(_forecast_batches(iter([pdf]), HORIZON_BY_PREFIX, 8))
+    assert len(got) == 64 * 8
+    assert np.isnan(got["tsb_forec"].to_numpy()).all()
+    want = _reference_rows(pdf)
+    for c in FORECAST_COLS:
+        if c != "tsb_forec":
+            assert np.array_equal(got[c].to_numpy(), want[c].to_numpy()), c
+
+
 def test_optimize_alpha_matrix_matches_scalar():
     rng = np.random.default_rng(14)
     for n in [2, 3, 17, 54, 100]:
@@ -171,6 +198,13 @@ def test_tsb_matrix_matches_scalar():
         for i in range(48):
             want = K.tsb(Y[i], 8)
             assert np.array_equal(got[i], want), f"n={n} row={i}"
+
+
+def test_tsb_matrix_rejects_non_positive_rows():
+    Y = np.ones((3, 5))
+    Y[1, 2] = 0.0
+    with pytest.raises(ValueError, match="strictly-positive"):
+        tsb_matrix(Y, 8)
 
 
 def test_mean_axis1_pairwise_identity():

@@ -25,6 +25,7 @@ from fforma_spark.functions.metrics import (
 )
 from fforma_spark.functions.models import (
     FORECAST_COLS,
+    FORECASTS_SCHEMA,
     HORIZON_BY_PREFIX,
     base_forecasts,
     forecast_series,
@@ -222,3 +223,156 @@ def test_owa_and_ensembles(spark, seq, seq_pd):
     # loser pruning returns a (possibly empty) subset
     losers = loser_model_pruning(errors.select("doc_id", *owa_cols), owa_cols)
     assert set(losers) <= set(owa_cols)
+
+
+# --- bit-parity pins for the SQL-text spine --------------------------------
+# The Column-API formulation the spine was first written in, kept as the
+# oracle: evaluate_with_owa / softmin_weights / weighted_rollup now build
+# one SQL expression per output column and must give the same bits.
+
+
+def _oracle_evaluate_with_owa(truth, forecasts, model_cols, scale_df, bench):
+    joined = truth.join(forecasts, ["doc_id", "pos"], "left").join(
+        scale_df, "doc_id"
+    )
+    aggs = []
+    for mc in model_cols:
+        p = mc.removesuffix("_forec")
+        e = F.abs(F.col("y") - F.col(mc))
+        scale_smape = F.abs(F.col("y")) + F.abs(F.col(mc))
+        aggs.append(
+            (200 * F.avg(F.when(scale_smape != 0, e / scale_smape))).alias(
+                f"{p}_smape"
+            )
+        )
+        aggs.append(
+            F.try_divide(100 * F.avg(e), F.first("mase_scale")).alias(f"{p}_mase")
+        )
+    per_series = joined.groupBy("doc_id").agg(*aggs)
+    bench_p = bench.removesuffix("_forec")
+    for mc in model_cols:
+        p = mc.removesuffix("_forec")
+        per_series = per_series.withColumn(
+            f"{p}_owa",
+            (
+                F.try_divide(F.col(f"{p}_mase"), F.col(f"{bench_p}_mase"))
+                + F.try_divide(F.col(f"{p}_smape"), F.col(f"{bench_p}_smape"))
+            )
+            / 2,
+        )
+    return per_series
+
+
+def _oracle_softmin_weights(errors, loss_cols):
+    neg = [(-F.col(c)) for c in loss_cols]
+    mx = F.greatest(*neg) if len(neg) > 1 else neg[0]
+    exps = [F.exp(e - mx) for e in neg]
+    tot = exps[0]
+    for e in exps[1:]:
+        tot = tot + e
+    return errors.select(
+        "doc_id", *[(e / tot).alias(f"w_{c}") for c, e in zip(loss_cols, exps)]
+    )
+
+
+def _oracle_weighted_rollup(forecasts, weights, model_cols, loss_cols):
+    joined = forecasts.join(F.broadcast(weights), "doc_id")
+    expr = F.lit(0.0)
+    for mc, lc in zip(model_cols, loss_cols):
+        expr = expr + F.col(f"w_{lc}") * F.col(mc)
+    return joined.select("doc_id", "pos", expr.alias("y_hat"))
+
+
+def _parity_panel(spark):
+    """Seeded truth/forecast/scale panel over all FORECAST_COLS with a
+    constant series (every model exact, zero MASE scale: 0/0 → NULL
+    OWA), zero actuals (the smape mask, incl. 0/0 where a model also
+    predicts 0) and a doc whose smape is fully masked for one model."""
+    rng = np.random.default_rng(2024)
+    h, m = 6, len(FORECAST_COLS)
+    truth, fc, scale = [], [], []
+    for d in range(40):
+        doc = f"{'HDWMQYS'[d % 7]}{d}"
+        y = rng.normal(50, 20, h).round(3)
+        P = y[:, None] + rng.normal(0, 8, (h, m))
+        s = float(rng.uniform(0.5, 9.0))
+        if d == 0:  # constant series
+            y, P, s = np.full(h, 5.0), np.full((h, m), 5.0), 0.0
+        elif d == 1:  # zero actuals; models 0 and 3 predict 0 there
+            y[[1, 4]] = 0.0
+            P[[1, 4], 0] = 0.0
+            P[1, 3] = 0.0
+        elif d == 2:  # all-zero actuals and mavg (model 5) predicts zeros
+            y[:] = 0.0
+            P[:, 5] = 0.0
+        truth += [(doc, p, float(y[p])) for p in range(h)]
+        fc += [(doc, p, *map(float, P[p])) for p in range(h)]
+        scale.append((doc, s))
+    return (
+        spark.createDataFrame(truth, "doc_id string, pos long, y double").coalesce(1),
+        spark.createDataFrame(fc, FORECASTS_SCHEMA).coalesce(1),
+        spark.createDataFrame(scale, "doc_id string, mase_scale double").coalesce(1),
+    )
+
+
+def _rows(df, key):
+    return sorted((tuple(r) for r in df.collect()), key=lambda t: t[:key])
+
+
+def _assert_same_bits(got, want, key):
+    assert got.columns == want.columns
+    g, w = _rows(got, key), _rows(want, key)
+    assert len(g) == len(w) > 0
+    for a, b in zip(g, w):
+        # exact ==, NULL exactly where the oracle has NULL
+        assert a == b, (a, b)
+
+
+@pytest.fixture
+def one_partition(spark):
+    """With a doc's rows spread over partitions, avg merges its partial
+    sums in no fixed order and two runs of one plan can differ in the
+    last bit; one input and one shuffle partition fix that order."""
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    yield
+    spark.conf.set(key, saved)
+
+
+def test_spine_bit_parity_with_column_api_oracle(spark, one_partition):
+    truth, fc, scale = _parity_panel(spark)
+    loss = [c.removesuffix("_forec") + "_owa" for c in FORECAST_COLS]
+    ev = evaluate_with_owa(truth, fc, FORECAST_COLS, scale, bench="naive2_forec")
+    ev_o = _oracle_evaluate_with_owa(truth, fc, FORECAST_COLS, scale, "naive2_forec")
+    _assert_same_bits(ev, ev_o, 1)
+    errs = {r["doc_id"]: r for r in ev.collect()}
+    assert all(errs["H0"][c] is None for c in loss)  # constant series
+    assert errs["W2"]["naive_smape"] == 200.0  # y == 0: every term 1
+    assert errs["W2"]["mavg_smape"] is None  # every term 0/0, masked
+
+    errors = ev.select("doc_id", *loss).na.fill(0.0)
+    w = softmin_weights(errors, loss)
+    w_o = _oracle_softmin_weights(errors, loss)
+    _assert_same_bits(w, w_o, 1)
+    _assert_same_bits(
+        weighted_rollup(fc, w, FORECAST_COLS, loss),
+        _oracle_weighted_rollup(fc, w_o, FORECAST_COLS, loss),
+        2,
+    )
+
+
+def test_softmin_plan_grows_linearly_with_models(spark):
+    """Staged softmin: the row max appears once in the optimized plan,
+    and doubling the model count less than 2.5x's the plan text (the
+    inlined formulation repeated every exp in every weight: O(M²))."""
+
+    def plan(m):
+        cols = [f"l{i}" for i in range(m)]
+        schema = "doc_id string, " + ", ".join(f"{c} double" for c in cols)
+        df = softmin_weights(spark.createDataFrame([], schema), cols)
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    p14, p28 = plan(14), plan(28)
+    assert p14.count("greatest(") == 1
+    assert len(p28) < 2.5 * len(p14), (len(p14), len(p28))

@@ -1,12 +1,16 @@
 """Session factory: master resolution must honor a spark-submit
 --master (cluster deployment contract, SCALE.md §1) and only fall back
-to local[$SPARK_GRAFT_CPUS] for plain python processes."""
+to local[$SPARK_GRAFT_CPUS] for plain python processes; unset, the core
+count and driver heap are sized from the host."""
 
 from __future__ import annotations
 
+import json
+import os
 import subprocess
 import sys
 
+import fforma_spark.session as session
 from fforma_spark.session import _default_shuffle_partitions
 
 
@@ -21,22 +25,13 @@ def test_default_shuffle_partitions_resolution():
     assert _default_shuffle_partitions("local[*,2]", 32) == 32
 
 
-def test_get_spark_does_not_force_master_under_submit():
-    """With the py4j gateway env present (how spark-submit launches
-    python), get_spark must NOT inject a local master — the submitted
-    one wins. Verified without a JVM: the builder's options map must
-    lack spark.master in submit mode and carry local[N] otherwise."""
-    code = """
-import os, sys
-os.environ["SPARK_GRAFT_CPUS"] = "7"
-mode = sys.argv[1]
-if mode == "submit":
-    os.environ["PYSPARK_GATEWAY_PORT"] = "59999"
-    os.environ["PYSPARK_GATEWAY_SECRET"] = "x"
-else:
-    os.environ.pop("PYSPARK_GATEWAY_PORT", None)
-
-# intercept at the builder: record option writes, stop before JVM
+_CAPTURE_CONF = """
+import json, os, sys
+for k, v in json.loads(sys.argv[1]).items():
+    if v is None:
+        os.environ.pop(k, None)
+    else:
+        os.environ[k] = v
 from pyspark.sql import SparkSession
 captured = {}
 class FakeBuilder:
@@ -50,16 +45,69 @@ try:
     S.get_spark("probe")
 except SystemExit:
     pass
-print("MASTER=" + captured.get("master", "ABSENT"))
+captured["default_mem"] = S._default_driver_mem()
+print("CONF=" + json.dumps(captured))
 """
-    for mode, want in (("submit", "MASTER=ABSENT"), ("plain", "MASTER=local[7]")):
-        out = subprocess.run(
-            [sys.executable, "-c", code, mode],
-            capture_output=True,
-            text=True,
-            check=True,
-        )
-        assert want in out.stdout, (mode, out.stdout, out.stderr)
+
+
+def _captured_conf(env: dict) -> dict:
+    out = subprocess.run(
+        [sys.executable, "-c", _CAPTURE_CONF, json.dumps(env)],
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    line = next(x for x in out.stdout.splitlines() if x.startswith("CONF="))
+    return json.loads(line[len("CONF="):])
+
+
+def test_get_spark_does_not_force_master_under_submit():
+    """With the py4j gateway env present (how spark-submit launches
+    python), get_spark must NOT inject a local master — the submitted
+    one wins. Verified without a JVM: the builder's options map must
+    lack spark.master in submit mode and carry local[N] otherwise."""
+    submit = {"PYSPARK_GATEWAY_PORT": "59999", "PYSPARK_GATEWAY_SECRET": "x"}
+    got = _captured_conf({"SPARK_GRAFT_CPUS": "7", **submit})
+    assert "master" not in got, got
+    got = _captured_conf({"SPARK_GRAFT_CPUS": "7", "PYSPARK_GATEWAY_PORT": None})
+    assert got["master"] == "local[7]", got
+
+
+def test_session_sized_from_host_when_env_unset():
+    """Without SPARK_GRAFT_CPUS / SPARK_GRAFT_DRIVER_MEM the session
+    takes the cores this process may use and a heap of a quarter of
+    host memory; with them set, the JVM options are exactly what they
+    were before host sizing existed. Verified without a JVM."""
+    plain = {"PYSPARK_GATEWAY_PORT": None}
+    got = _captured_conf(
+        {"SPARK_GRAFT_CPUS": None, "SPARK_GRAFT_DRIVER_MEM": None, **plain}
+    )
+    assert got["master"] == f"local[{len(os.sched_getaffinity(0))}]"
+    mem = got["default_mem"]
+    assert got["spark.driver.memory"] == mem
+    assert got["spark.driver.extraJavaOptions"] == (
+        f"-Xms{mem} -XX:+AlwaysPreTouch -XX:+UseParallelGC"
+    )
+    assert 1024 <= int(mem.removesuffix("m")) <= 16384
+
+    got = _captured_conf(
+        {"SPARK_GRAFT_CPUS": "7", "SPARK_GRAFT_DRIVER_MEM": "6g", **plain}
+    )
+    assert got["master"] == "local[7]"
+    assert got["spark.driver.memory"] == "6g"
+    assert got["spark.driver.extraJavaOptions"] == (
+        "-Xms6g -XX:+AlwaysPreTouch -XX:+UseParallelGC"
+    )
+
+
+def test_default_driver_mem_is_a_clamped_quarter(monkeypatch):
+    for host_bytes, want in (
+        (15 * 2**30, "3840m"),
+        (2 * 2**30, "1024m"),
+        (256 * 2**30, "16384m"),
+    ):
+        monkeypatch.setattr(session, "_host_memory_bytes", lambda b=host_bytes: b)
+        assert session._default_driver_mem() == want
 
 
 def test_shuffle_guard_never_clobbers_user_runtime_value(spark):
