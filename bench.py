@@ -154,18 +154,32 @@ def run_bench(master: str) -> dict:
     # census + a normalized-plan hash, so a cross-round time drift can
     # be adjudicated from the JSON alone — same md5 ⇒ the plan didn't
     # change, the residual is the host; changed counts ⇒ a real plan
-    # diff to explain. Built AFTER the timed section (planning only,
-    # nothing executes).
+    # diff to explain. Built AFTER the timed section. Every key but
+    # ``wscg_final`` reads the initial plan (planning only); under AQE
+    # that plan prints no codegen stages, so ``wscg_final`` counts them
+    # in the final AQE plan, which runs the query stages (not the
+    # result stage) to exist.
+    def _codegen_stages(info) -> int:
+        kids = info.children()
+        return int(info.nodeName().startswith("WholeStageCodegen")) + sum(
+            _codegen_stages(kids.apply(i)) for i in range(kids.size())
+        )
+
     def _plan_fp(df) -> dict:
         import hashlib
         import re
 
-        plan = df._jdf.queryExecution().executedPlan().toString()
+        executed = df._jdf.queryExecution().executedPlan()
+        plan = executed.toString()
         norm = re.sub(r"#\d+L?", "#", plan)
         norm = re.sub(r"\d+", "N", norm)
+        if executed.nodeName() == "AdaptiveSparkPlan":
+            executed = executed.finalPhysicalPlan()
+        info = spark._jvm.org.apache.spark.sql.execution.SparkPlanInfo
         return {
             "exchanges": plan.count("Exchange"),
             "wscg": plan.count("WholeStageCodegen"),
+            "wscg_final": _codegen_stages(info.fromSparkPlan(executed)),
             "arrow_stages": (
                 plan.count("ArrowEvalPython")
                 + plan.count("MapInPandas")
@@ -270,6 +284,10 @@ def run_scaling() -> dict:
 
     results = {}
     n_trials = int(os.environ.get("SPARK_GRAFT_SCALE_TRIALS", "3"))
+    sys.path.insert(0, repo)
+    from fforma_spark.session import driver_mem
+
+    mem = driver_mem()  # the heap get_spark would size on this host
     # interleave 8,32,8,32,... so slow VM phases hit both configs
     # equally; keep the best leg per config
     for _trial in range(n_trials):
@@ -285,11 +303,11 @@ def run_scaling() -> dict:
                     f"local[{n}]",
                     "--conf", "spark.sql.shuffle.partitions=%d" % n,
                     "--conf", "spark.sql.adaptive.enabled=true",
-                    "--conf", "spark.driver.memory=8g",
+                    "--conf", f"spark.driver.memory={mem}",
                     "--conf", "spark.ui.enabled=false",
                     # see fforma_spark.session: mmap_lock mitigation
                     "--conf",
-                    "spark.driver.extraJavaOptions=-Xms8g -XX:+AlwaysPreTouch -XX:+UseParallelGC",
+                    f"spark.driver.extraJavaOptions=-Xms{mem} -XX:+AlwaysPreTouch -XX:+UseParallelGC",
                     "--conf", "spark.storage.memoryMapThreshold=2g",
                     "--py-files",
                     zpath,

@@ -31,8 +31,8 @@ re-verified by the parity test on every run):
   driver/executor agreement — kernels.py:_ols_solve);
 * ``np.fft.rfft(M, axis=1)`` applies the same pocketfft 1-D
   transform per row;
-* ``np.polyfit`` with a stacked RHS applies one factorization
-  column-by-column, matching the single-RHS call.
+* ``np.polyfit`` runs once per row: with a stacked RHS its one lstsq
+  call can differ from the single-RHS call in the last bit.
 
 Where the scalar code uses ``math.log`` (AIC, nonlinearity), the
 batched code calls ``math.log`` per row too — numpy's vectorized log
@@ -398,11 +398,11 @@ def _hurst_matrix(X: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
         patch |= bad
         with np.errstate(divide="ignore", invalid="ignore"):
             rs[i] = (r / sd).mean(axis=1)
-    good = ~patch
-    if good.any():
-        logn = np.log(np.asarray(sizes, dtype=np.float64))
-        coeffs = np.polyfit(logn, np.log(rs[:, good]), 1)
-        out[good] = coeffs[0]
+    logn = np.log(np.asarray(sizes, dtype=np.float64))
+    # one single-RHS fit per row: a stacked-RHS polyfit (one lstsq over
+    # all rows) differs from it in the last bit on some rows at n >= 1000
+    for j in np.flatnonzero(~patch):
+        out[j] = np.polyfit(logn, np.log(rs[:, j]), 1)[0]
     return out, patch
 
 
@@ -773,43 +773,12 @@ MAX_SMALL_BATCH_LEN = 512
 #: at n=2000)
 BIG_BATCH_ROWS = 16
 
-#: rows-per-kernel-call element budget (~384 KB of float64): big
-#: enough to amortize numpy dispatch, small enough that the block and
-#: its temporaries stay cache-resident. Measured on this box with
-#: 8/32 concurrent workers over n=93 series: 50k-row blocks collapse
-#: 32-way aggregate throughput to 0.76x of 8-way (DRAM-bandwidth
-#: saturation — every executor thread streams multi-MB matrices),
-#: while ~512-row blocks give the best absolute 32-way throughput
-#: (~7x the unchunked rate) AND restore near-linear 8->32 scaling.
-CHUNK_ELEMS = 48_000
-
 
 def feature_matrix(X: np.ndarray, seasonality: int) -> dict[str, np.ndarray]:
     """All 45 T0 features for a (B, n) matrix of same-length series —
-    bit-for-bit equal to per-row :func:`kernels.feature_vector`.
-
-    Large batches are processed in cache-resident row chunks
-    (``CHUNK_ELEMS`` elements per block); rows are independent, so
-    chunking is exact by construction.
-    """
-    X = np.ascontiguousarray(X, dtype=np.float64)
-    B, n = X.shape
-    rows = max(MIN_BATCH_ROWS, CHUNK_ELEMS // max(n, 1))
-    if B <= rows:
-        return _feature_matrix_block(X, seasonality)
-    parts = [
-        _feature_matrix_block(X[lo : lo + rows], seasonality)
-        for lo in range(0, B, rows)
-    ]
-    return {
-        name: np.concatenate([p[name] for p in parts]) for name in parts[0]
-    }
-
-
-def _feature_matrix_block(
-    X: np.ndarray, seasonality: int
-) -> dict[str, np.ndarray]:
-    """One cache-sized block of :func:`feature_matrix`.
+    bit-for-bit equal to per-row :func:`kernels.feature_vector`. Rows
+    are independent; the caller sizes B (functions/dispatch.py blocks
+    groups to a cache-resident budget).
 
     Constant rows are recomputed whole via the scalar path; rows
     flagged by a sub-kernel's data-dependent branch get just that

@@ -26,6 +26,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
+from fforma_spark.functions import dispatch as D
+
 _BLOCK = 256
 _MAGIC_INT = 0xD0D1
 _MAGIC_FLT = 0x60F1
@@ -85,17 +87,12 @@ def dod_encode(arr: np.ndarray) -> bytes:
     return b"".join(head + chunks)
 
 
-#: rows-per-matrix-encode element budget: keeps the unpacked bit
-#: matrix (rows × 256 × 64 bytes per block) cache-resident so 32
-#: concurrent workers don't saturate the memory controller — the same
-#: blocking rule as batch_kernels.CHUNK_ELEMS, measured there.
-_ENC_CHUNK_ELEMS = 48_000
-
-
 def dod_encode_matrix(X: np.ndarray) -> list[bytes]:
     """Batched :func:`dod_encode` for a ``(B, n)`` int64 matrix with
     n ≥ 3 — BIT-FOR-BIT equal to ``[dod_encode(row) for row in X]``
-    (asserted exactly in tests/test_compress.py).
+    (asserted exactly in tests/test_compress.py). Rows are independent;
+    the caller sizes B (functions/dispatch.py keeps the unpacked bit
+    matrix, rows × 256 × 64 bytes per block, cache-resident).
 
     The per-series encoder costs ~180 µs/doc, almost all numpy call
     dispatch on ~100-element arrays; batching same-length series
@@ -110,18 +107,6 @@ def dod_encode_matrix(X: np.ndarray) -> list[bytes]:
     B, n = X.shape
     if n < 3:
         raise ValueError("dod_encode_matrix requires n >= 3")
-    rows = max(1, _ENC_CHUNK_ELEMS // n)
-    if B > rows:
-        out: list[bytes] = []
-        for lo in range(0, B, rows):
-            out.extend(_dod_encode_block(X[lo : lo + rows]))
-        return out
-    return _dod_encode_block(X)
-
-
-def _dod_encode_block(X: np.ndarray) -> list[bytes]:
-    """One cache-sized row block of :func:`dod_encode_matrix`."""
-    B, n = X.shape
     # heads: magic(4) | n(8) | v0(8) | v1(8) — byte-identical to the
     # scalar path's np .tobytes() concatenation (native little-endian)
     head = np.empty((B, 28), dtype=np.uint8)
@@ -165,31 +150,20 @@ def _dod_encode_block(X: np.ndarray) -> list[bytes]:
 
 def dod_encode_series(tokens: "pd.Series | list") -> list[bytes]:
     """Encode a heterogeneous collection of int sequences, grouping
-    same-length series through :func:`dod_encode_matrix` (short series
-    n < 3 take the scalar head-only path). Output order matches input
-    order; values are bit-for-bit :func:`dod_encode`."""
+    same-length series through :func:`dod_encode_matrix` in cache-sized
+    blocks (short series n < 3 and lone lengths take the scalar path).
+    Output order matches input order; values are bit-for-bit
+    :func:`dod_encode`."""
     arrs = [np.asarray(t, dtype=np.int64) for t in tokens]
-    B = len(arrs)
-    out: list[bytes | None] = [None] * B
-    lens = np.fromiter((len(a) for a in arrs), dtype=np.int64, count=B)
-    order = np.argsort(lens, kind="stable")
-    lo = 0
-    while lo < B:
-        n = int(lens[order[lo]])
-        hi = lo
-        while hi < B and lens[order[hi]] == n:
-            hi += 1
-        idx = order[lo:hi]
+    out: list[bytes | None] = [None] * len(arrs)
+    for (n,), idx in D.groups(D.lengths(arrs)):
         if n < 3 or len(idx) == 1:
             for i in idx:
                 out[i] = dod_encode(arrs[i])
-        else:
-            X = np.empty((len(idx), n), dtype=np.int64)
-            for j, i in enumerate(idx):
-                X[j] = arrs[i]
-            for i, blob in zip(idx, dod_encode_matrix(X)):
+            continue
+        for sub, X in D.blocks(arrs, idx, n, D.CACHE_ELEMS, np.int64):
+            for i, blob in zip(sub, dod_encode_matrix(X)):
                 out[i] = blob
-        lo = hi
     return out  # type: ignore[return-value]
 
 
@@ -348,14 +322,10 @@ def decompress_floats_udf():
 
 
 def _cb_batches(it):
-    """Pooled mapInPandas body for :func:`compressed_blocks`: Arrow
-    batches (4k rows) are coalesced to ~50k-row pools so the
-    same-length groups feeding :func:`dod_encode_matrix` are large
-    enough to amortize dispatch (the identical pooling rationale —
-    and helper — as features._pooled)."""
-    from fforma_spark.functions.features import _pooled
-
-    for pdf in _pooled(it):
+    """Pooled mapInPandas body for :func:`compressed_blocks`: pooling
+    (functions/dispatch.py) makes the same-length groups feeding
+    :func:`dod_encode_matrix` tall enough to amortize dispatch."""
+    for pdf in D.pooled(it):
         yield pd.DataFrame(
             {
                 "doc_id": pdf["doc_id"],

@@ -24,6 +24,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, Window as W, functions as F
 
+from fforma_spark.functions import dispatch as D
 from fforma_spark.functions.batch_kernels import (
     BIG_BATCH_ROWS,
     MAX_SMALL_BATCH_LEN,
@@ -41,58 +42,24 @@ SEASONALITY_BY_PREFIX = {"H": 24, "D": 7, "W": 52, "M": 12, "Q": 4, "Y": 1, "S":
 FEATURES_SCHEMA = "doc_id string, " + ", ".join(f"{n} double" for n in FEATURE_NAMES)
 
 
-#: coalesce incoming Arrow batches (maxRecordsPerBatch is a global
-#: 4096) up to this many rows before kernel dispatch — bigger pools
-#: mean bigger same-length groups, which is where the batched kernels'
-#: win comes from (measured: 92% of rows land in batchable groups at
-#: 10k pool vs 56% at 2k on the bench length distribution). Bounded
-#: by a token budget so whale-heavy pools can't balloon memory.
-_POOL_ROWS = 50_000
-_POOL_TOKENS = 16_000_000  # ~128 MB of float64 series data
-
-
-def _pooled(
-    it: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    buf: list[pd.DataFrame] = []
-    rows = tokens = 0
-    for pdf in it:
-        if len(pdf) == 0:
-            continue
-        buf.append(pdf)
-        rows += len(pdf)
-        tokens += int(sum(len(t) for t in pdf["tokens"]))
-        if rows >= _POOL_ROWS or tokens >= _POOL_TOKENS:
-            yield pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
-            buf, rows, tokens = [], 0, 0
-    if buf:
-        yield pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
-
-
 def _feature_batches(
     it: Iterator[pd.DataFrame], default_seasonality: int
 ) -> Iterator[pd.DataFrame]:
-    """Pooled, grouped feature kernel dispatch.
+    """Pooled, grouped feature kernel dispatch (functions/dispatch.py).
 
-    Incoming Arrow batches are pooled to ``_POOL_ROWS`` rows, the pool
-    is grouped by (seasonality, length), and each big-enough group
-    runs the length-batched ``feature_matrix`` — a bit-for-bit twin of
-    per-row ``feature_vector`` (the exactness contract tested in
-    tests/test_batch_kernels.py) that amortizes the ~3 ms/series numpy
-    dispatch overhead across the group. Small groups and short series
-    take the scalar path unchanged. Output values are therefore
-    IDENTICAL to the all-scalar implementation; only the physical
-    execution differs.
+    Each pool is grouped by (seasonality, length), and each big-enough
+    group runs the length-batched ``feature_matrix`` in cache-sized
+    blocks — a bit-for-bit twin of per-row ``feature_vector`` (the
+    exactness contract tested in tests/test_batch_kernels.py) that
+    amortizes the ~3 ms/series numpy dispatch overhead across the
+    group. Small groups and short series take the scalar path
+    unchanged. Output values are therefore IDENTICAL to the all-scalar
+    implementation; only the physical execution differs.
     """
-    n_feat = len(FEATURE_NAMES)
-    for pdf in _pooled(it):
+    for pdf in D.pooled(it):
         B = len(pdf)
-        if B == 0:
-            yield pd.DataFrame(columns=["doc_id", *FEATURE_NAMES])
-            continue
         doc_ids = pdf["doc_id"].to_numpy()
         tokens = pdf["tokens"].to_numpy()
-        has_true = "n_true" in pdf.columns
         seas = np.fromiter(
             (
                 SEASONALITY_BY_PREFIX.get(str(d)[:1], default_seasonality)
@@ -101,19 +68,8 @@ def _feature_batches(
             dtype=np.int64,
             count=B,
         )
-        lens = np.fromiter((len(t) for t in tokens), dtype=np.int64, count=B)
-        vals = np.empty((B, n_feat), dtype=np.float64)
-
-        # group rows by (seasonality, length); one kernel call per group
-        order = np.lexsort((lens, seas))
-        grp_key = np.stack([seas[order], lens[order]], axis=1)
-        bounds = np.flatnonzero(
-            np.r_[True, (grp_key[1:] != grp_key[:-1]).any(axis=1)]
-        )
-        for g, lo in enumerate(bounds):
-            hi = bounds[g + 1] if g + 1 < len(bounds) else B
-            idx = order[lo:hi]
-            s, n = int(seas[idx[0]]), int(lens[idx[0]])
+        vals = np.empty((B, len(FEATURE_NAMES)), dtype=np.float64)
+        for (s, n), idx in D.groups(seas, D.lengths(tokens)):
             if n == 0:
                 vals[idx] = 0.0
             elif (
@@ -121,12 +77,10 @@ def _feature_batches(
                 and n >= MIN_BATCH_LEN
                 and (len(idx) >= BIG_BATCH_ROWS or n <= MAX_SMALL_BATCH_LEN)
             ):
-                X = np.empty((len(idx), n), dtype=np.float64)
-                for j, i in enumerate(idx):
-                    X[j] = tokens[i]
-                fm = feature_matrix(X, s)
-                for c, name in enumerate(FEATURE_NAMES):
-                    vals[idx, c] = fm[name]
+                for sub, X in D.blocks(tokens, idx, n, D.CACHE_ELEMS):
+                    fm = feature_matrix(X, s)
+                    for c, name in enumerate(FEATURE_NAMES):
+                        vals[sub, c] = fm[name]
             else:
                 for i in idx:
                     fv = feature_vector(
@@ -135,7 +89,7 @@ def _feature_batches(
                     vals[i] = [fv[name] for name in FEATURE_NAMES]
 
         out = pd.DataFrame(vals, columns=list(FEATURE_NAMES))
-        if has_true:  # whale cap active: report the TRUE length
+        if "n_true" in pdf.columns:  # whale cap active: the TRUE length
             out["series_length"] = pdf["n_true"].to_numpy().astype(np.float64)
         out.insert(0, "doc_id", doc_ids)
         yield out

@@ -41,22 +41,22 @@ import math
 
 import numpy as np
 
-from fforma_spark.functions import kernels as K
+from fforma_spark.functions import dispatch as D, kernels as K
 
 _INVPHI = (math.sqrt(5) - 1) / 2
 
-#: element budget for one padded golden-section pod (~32 MB of float64
-#: in the padded matrix + its fitted twin): big enough that the ~90
-#: driver-shaped length groups of a task pool into ONE pod, small
-#: enough that a whale group cannot drag short groups into its padding
-_POD_ELEMS = 4_000_000
+#: TSB's beta grid (K.tsb's 9x7 alpha x beta grid collapses to it on
+#: strictly-positive rows, see :func:`tsb_matrix`)
+TSB_BETAS = np.array([0.01, 0.02, 0.03, 0.05, 0.1, 0.2, 0.3])
 
 
 def ses_last_matrix(alpha, Y: np.ndarray) -> np.ndarray:
     """Final SES level per row — batched ``K.ses_run(alpha, y)[1]``.
 
-    ``alpha`` is a scalar or a (B,) vector (per-doc optimal alphas).
-    """
+    ``alpha`` broadcasts against (B,): a scalar, (B,) per-doc alphas,
+    or a (k, B) stack, which returns (k, B) — k elementwise sweeps in
+    one loop (``forecast_group_matrix`` runs alpha 0.1 and the optimal
+    alpha this way)."""
     one_m = 1.0 - alpha
     level = Y[:, 0].copy()
     for i in range(Y.shape[1]):
@@ -149,8 +149,9 @@ def optimize_alpha_ragged(
     # blow up memory (and waste recurrence steps) when one whale group
     # shares a batch with many short ones — one 56k-token doc next to
     # 1.5k ~50-token docs would pad to ~0.7 GB. Pack length-sorted
-    # groups into pods under an element budget; per-row independence
-    # makes pod boundaries invisible to the result.
+    # groups into pods under the dispatcher's memory cap (big enough
+    # that the ~90 driver-shaped length groups of a task pool into ONE
+    # pod); per-row independence makes pod boundaries invisible.
     if len(Ys) > 1:
         order = sorted(range(len(Ys)), key=lambda i: Ys[i].shape[1])
         pods: list[list[int]] = []
@@ -158,7 +159,7 @@ def optimize_alpha_ragged(
         rows = 0
         for i in order:
             b, n = Ys[i].shape
-            if cur and (rows + b) * n > _POD_ELEMS:
+            if cur and (rows + b) * n > D.MEMORY_ELEMS:
                 pods.append(cur)
                 cur, rows = [], 0
             cur.append(i)
@@ -263,12 +264,11 @@ def tsb_matrix(Y: np.ndarray, h: int) -> np.ndarray:
     if not (Y > 0).all():
         raise ValueError("tsb_matrix requires strictly-positive rows")
     B, n = Y.shape
-    b_grid = np.array([0.01, 0.02, 0.03, 0.05, 0.1, 0.2, 0.3])
-    g = b_grid.size
+    g = TSB_BETAS.size
     zfit = np.empty((B, g, n))
     zfit[:, :, 0] = Y[:, 0, None]
     for i in range(1, n):
-        zfit[:, :, i] = zfit[:, :, i - 1] + b_grid * (
+        zfit[:, :, i] = zfit[:, :, i - 1] + TSB_BETAS * (
             Y[:, i, None] - zfit[:, :, i - 1]
         )
     shifted = np.concatenate(
@@ -338,7 +338,11 @@ def forecast_group_matrix(
     else:
         out["smavg"] = out["average"]
 
-    ses10 = ses_last_matrix(0.1, Y)
+    if alpha_opt is None:
+        alpha_opt = optimize_alpha_matrix(Y)
+    # one recurrence sweep for both SES levels (alpha 0.1, optimal
+    # alpha): elementwise, so each row is its own scalar run
+    ses10, ses_opt = ses_last_matrix(np.stack([np.full(B, 0.1), alpha_opt]), Y)
     out["ses"] = _full(ses10)
 
     # Intermittent-demand family, strictly-positive invariant:
@@ -350,9 +354,6 @@ def forecast_group_matrix(
     out["croston"] = _full(ses10 / yip_cl * 1.0)
     out["croston_sba"] = _full(ses10 / yip_cl * 0.95)
 
-    if alpha_opt is None:
-        alpha_opt = optimize_alpha_matrix(Y)
-    ses_opt = ses_last_matrix(alpha_opt, Y)
     out["croston_opt"] = _full(ses_opt / yip_opt * 1.0)
 
     out["tsb"] = tsb_matrix(Y, h)

@@ -25,7 +25,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 
-from fforma_spark.functions import kernels as K
+from fforma_spark.functions import dispatch as D, kernels as K
 from fforma_spark.functions.features import SEASONALITY_BY_PREFIX
 
 MODELS = [
@@ -90,85 +90,67 @@ def _forecast_batches(
 ) -> Iterator[pd.DataFrame]:
     """Batch engine for :func:`base_forecasts`.
 
-    Docs are grouped by (train-length, seasonality, horizon) and each
-    group runs through the vectorized
-    :func:`forecast_batch.forecast_group_matrix` — bit-identical to the
-    original per-doc :func:`forecast_series` loop (pinned by
-    tests/test_forecast_batch.py) and ~100x cheaper on the
-    optimized-alpha models. Docs whose train series contains a
-    non-positive value keep the per-doc scalar path (ragged
-    intermittent-demand shapes). Row order (doc order as received, pos
-    ascending within doc) is preserved exactly.
+    Pooled docs (functions/dispatch.py) are grouped by (train-length,
+    seasonality, horizon) and each group runs through the vectorized
+    :func:`forecast_batch.forecast_group_matrix` in blocks under the
+    dispatcher's memory cap — bit-identical to the original per-doc
+    :func:`forecast_series` loop (pinned by tests/test_forecast_batch.py)
+    and ~100x cheaper on the optimized-alpha models. Docs whose train
+    series contains a non-positive value keep the per-doc scalar path
+    (ragged intermittent-demand shapes). Row order (doc order as
+    received, pos ascending within doc) is preserved exactly.
     """
-    from fforma_spark.functions.forecast_batch import forecast_group_matrix
+    from fforma_spark.functions.forecast_batch import (
+        TSB_BETAS,
+        forecast_group_matrix,
+        optimize_alpha_ragged,
+    )
 
-    cols = ["doc_id", "pos", *FORECAST_COLS]
-    for pdf in it:
-        kept_ids: list = []
-        kept_train: list[np.ndarray] = []
-        kept_h: list[int] = []
-        groups: dict[tuple[int, int, int, bool], list[int]] = {}
-        for doc_id, tokens in zip(pdf["doc_id"], pdf["tokens"]):
-            pfx = str(doc_id)[:1]
-            s = SEASONALITY_BY_PREFIX.get(pfx, 1)
-            h = h_by_prefix.get(pfx, default_h)
-            y = np.asarray(tokens, dtype=np.float64)
-            if len(y) <= h:  # too short to split — skip (min-length filter
-                continue  # analog: fforma/utils/utils.py:44-52)
-            train, _ = _split(y, h)
-            k = len(kept_ids)
-            kept_ids.append(doc_id)
-            kept_train.append(train)
-            kept_h.append(h)
-            fast = bool(np.all(train > 0))
-            groups.setdefault((len(train), s, h, fast), []).append(k)
-        if not kept_ids:
-            yield pd.DataFrame(columns=cols)
-            continue
-        h_arr = np.asarray(kept_h, dtype=np.int64)
+    # a pool holds a float64 stack and 14 output columns per doc, so it
+    # stops at the recurrence memory cap (README "Kernel dispatch")
+    for pdf in D.pooled(it, D.MEMORY_ELEMS):
+        pfx = [str(d)[:1] for d in pdf["doc_id"]]
+        seas = np.array([SEASONALITY_BY_PREFIX.get(p, 1) for p in pfx], np.int64)
+        h_all = np.array([h_by_prefix.get(p, default_h) for p in pfx], np.int64)
+        # too short to split — skip (min-length filter analog:
+        # fforma/utils/utils.py:44-52)
+        keep = np.flatnonzero(D.lengths(pdf["tokens"]) > h_all)
+        h_arr = h_all[keep]
+        # views of the input, not float64 copies of the whole pool:
+        # D.blocks stacks them as float64, forecast_series converts its own
+        tokens = pdf["tokens"]
+        train = [np.asarray(tokens.iat[i])[:-h] for i, h in zip(keep, h_arr)]
+        fast = np.array([np.all(y > 0) for y in train], dtype=bool)
         offsets = np.concatenate([[0], np.cumsum(h_arr)])
         total = int(offsets[-1])
         # NaN, not np.empty: a model the kernel does not return stays NaN
         out_cols = {c: np.full(total, np.nan) for c in FORECAST_COLS}
-        # pool the optimized-alpha golden-section across ALL fast
-        # groups (one padded recurrence sweep per iteration instead of
-        # one per length group — forecast_batch.optimize_alpha_ragged)
-        from fforma_spark.functions.forecast_batch import optimize_alpha_ragged
-
-        fast_items = [
-            (key, rows, np.stack([kept_train[k] for k in rows]))
-            for key, rows in groups.items()
-            if key[3]
-        ]
-        alphas = (
-            optimize_alpha_ragged([Y for _, _, Y in fast_items])
-            if fast_items
-            else []
-        )
-        for ((n, s, h, _fast), rows, Y), al in zip(fast_items, alphas):
-            idx = np.asarray(rows, dtype=np.int64)
-            dest = (offsets[idx][:, None] + np.arange(h)).ravel()
+        blocks = []
+        for (n, s, h, f), idx in D.groups(D.lengths(train), seas[keep], h_arr, fast):
+            if f:
+                blocks += [
+                    (s, h, sub, Y)
+                    for sub, Y in D.blocks(
+                        train, idx, n, D.MEMORY_ELEMS, width=TSB_BETAS.size
+                    )
+                ]
+                continue
+            for k in idx:  # scalar fallback: non-positive values present
+                fc1 = forecast_series(train[k], h, s)
+                for c in FORECAST_COLS:
+                    out_cols[c][offsets[k] : offsets[k] + h] = fc1[c]
+        # one optimized-alpha golden-section over ALL fast blocks (one
+        # padded recurrence sweep per iteration, not one per group)
+        alphas = optimize_alpha_ragged([b[3] for b in blocks]) if blocks else []
+        for (s, h, sub, Y), al in zip(blocks, alphas):
+            dest = (offsets[sub][:, None] + np.arange(h)).ravel()
             fc = forecast_group_matrix(Y, h, s, alpha_opt=al)
             for m, mat in fc.items():
                 out_cols[f"{m}_forec"][dest] = mat.ravel()
-        for (n, s, h, fast), rows in groups.items():
-            if fast:
-                continue  # handled above
-            for k in rows:  # scalar fallback: non-positive values present
-                fc1 = forecast_series(kept_train[k], h, s)
-                lo = int(offsets[k])
-                for c in FORECAST_COLS:
-                    out_cols[c][lo : lo + h] = fc1[c]
         pos = np.arange(total, dtype=np.int64) - np.repeat(offsets[:-1], h_arr)
-        yield pd.DataFrame(
-            {
-                "doc_id": np.repeat(
-                    np.asarray(kept_ids, dtype=object), h_arr
-                ),
-                "pos": pos,
-                **out_cols,
-            }
-        )[cols]
+        ids = np.asarray(pdf["doc_id"], dtype=object)[keep]
+        # columns in FORECASTS_SCHEMA order already: no reordering copy
+        yield pd.DataFrame({"doc_id": np.repeat(ids, h_arr), "pos": pos, **out_cols})
 
 
 # horizon convention per M4 group (fforma/utils/m4_data.py:14-25)

@@ -47,6 +47,11 @@ def _default_driver_mem() -> str:
     return f"{max(1024, min(16384, mb))}m"
 
 
+def driver_mem() -> str:
+    """``$SPARK_GRAFT_DRIVER_MEM``, else :func:`_default_driver_mem`."""
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem()
+
+
 def get_spark(
     app_name: str = "fforma_spark",
     master: str | None = None,
@@ -74,7 +79,7 @@ def get_spark(
     if master is None and not under_submit:
         master = f"local[{cpus}]"
 
-    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem()
+    mem = driver_mem()
     builder = (
         SparkSession.builder.appName(app_name)
         # Single-JVM local mode: many task threads contend on the

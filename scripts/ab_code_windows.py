@@ -42,11 +42,15 @@ def leg(zip_path: str, cpus: int, tag: str, seq: str, scratch: str,
     subprocess.run(["rm", "-rf", out], check=False)
     env = dict(os.environ)
     env["SPARK_GRAFT_CPUS"] = str(cpus)
+    sys.path.insert(0, REPO)
+    from fforma_spark.session import driver_mem
+
+    mem = driver_mem()  # the heap get_spark would size on this host
     cmd = [
         SUBMIT, "--master", f"local[{cpus}]",
         "--conf", f"spark.local.dir={scratch}/spark_ab",
-        "--driver-memory", "16g",
-        "--conf", ("spark.driver.extraJavaOptions=-Xms16g "
+        "--driver-memory", mem,
+        "--conf", (f"spark.driver.extraJavaOptions=-Xms{mem} "
                    "-XX:+AlwaysPreTouch -XX:+UseParallelGC"),
         "--conf", "spark.storage.memoryMapThreshold=2g",
         "--py-files", zip_path,

@@ -48,6 +48,10 @@ def _run_leg(
 ) -> dict:
     env = dict(os.environ)
     env["SPARK_GRAFT_CPUS"] = str(cpus)
+    sys.path.insert(0, REPO)
+    from fforma_spark.session import driver_mem
+
+    mem = driver_mem()  # the heap get_spark would size on this host
     cmd = [
         _submit_bin(),
         "--master",
@@ -66,11 +70,10 @@ def _run_leg(
         # without it the 32-thread leg loses ~2x to mmap_lock
         # contention, corrupting the scaling measurement.
         "--driver-memory",
-        os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+        mem,
         "--conf",
         "spark.driver.extraJavaOptions="
-        f"-Xms{os.environ.get('SPARK_GRAFT_DRIVER_MEM', '16g')} "
-        "-XX:+AlwaysPreTouch -XX:+UseParallelGC",
+        f"-Xms{mem} -XX:+AlwaysPreTouch -XX:+UseParallelGC",
         "--conf",
         "spark.storage.memoryMapThreshold=2g",
         "--py-files",

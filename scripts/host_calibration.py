@@ -6,8 +6,10 @@ feature extraction) as N plain OS processes — no Spark, no JVM — at
 N=8 and N=32, and reports effective cores at each level. On ideal
 hardware effective cores == N; on an overcommitted VM the ratio
 (eff32 / eff8) is the MAXIMUM speedup any 8→32 scale-up can achieve
-on this box. BENCH_SCALING.json's engine speedup should be read
-against this ceiling.
+on that host. BENCH_SCALING.json's engine speedup (measured on a
+32-core host) should be read against this ceiling. The levels are
+fixed: on a host with fewer than 32 cores both levels oversubscribe
+it and the ratio reads ~1.0, which says nothing about the engine.
 
 Usage: python scripts/host_calibration.py  →  one JSON line.
 """
@@ -33,13 +35,13 @@ print(time.time() - t0)
 """
 
 
-#: the batched-dispatch twin: the SAME 1500 synthetic series per
-#: process, but driven through the production pooled/grouped
-#: feature-batch path (features._feature_batches -> cache-blocked
-#: feature_matrix). This workload is memory-bandwidth-heavy where the
-#: scalar one is dispatch-heavy, so its plain-process ceiling is the
-#: one to grade the batched tiers phase against: 4x threads share one
-#: memory controller on this box, which no engine can scale past.
+#: the batched-dispatch twin: synthetic series driven through the
+#: production feature fabric (features._feature_batches: pooled,
+#: grouped and cache-blocked by functions/dispatch.py). This workload
+#: is memory-bandwidth-heavy where the scalar one is dispatch-heavy,
+#: so its plain-process ceiling is the one to grade the batched tiers
+#: phase against: on the 32-core host it was written for, 4x the
+#: threads shared one memory controller, which no engine scales past.
 WORK_BATCHED = """
 import sys; sys.path.insert(0, {repo!r})
 import numpy as np, pandas as pd, time

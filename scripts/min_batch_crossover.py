@@ -3,12 +3,16 @@
 #3): at which (group rows B, series length n) does the length-batched
 ``feature_matrix`` beat B calls of scalar ``feature_vector``?
 
-The dispatch constants MIN_BATCH_ROWS / MIN_BATCH_LEN in
-functions/batch_kernels.py gate _feature_batches' group dispatch; until
-round 5 they were asserted (3, 20), not measured. This script times
-both paths on identical synthetic groups (the engine's own Philox
-series, truncated/tiled to each length), best-of-R, and prints one
-JSON line per cell plus a recommendation. Pure numpy — no Spark, no
+The batched-vs-scalar thresholds (MIN_BATCH_ROWS, MIN_BATCH_LEN,
+MAX_SMALL_BATCH_LEN, BIG_BATCH_ROWS in functions/batch_kernels.py)
+pick _feature_batches' path from a whole group's height; until round 5
+they were asserted, not measured. This script times both paths on
+identical synthetic groups (the engine's own Philox series,
+truncated/tiled to each length), best-of-R, and prints one JSON line
+per cell plus a recommendation. It times ONE feature_matrix call per
+group: the fabric splits groups above functions/dispatch.CACHE_ELEMS
+(48k elements, e.g. 64 x 2000) into cache-sized blocks, so the largest
+cells overstate the batched path's cache misses. Pure numpy — no Spark, no
 JVM — so a clean window only needs a quiet CPU; run it bracketed by
 scripts/host_calibration.py like any other timing evidence.
 

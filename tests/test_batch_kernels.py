@@ -62,6 +62,8 @@ def _assert_bit_equal(X: np.ndarray, s: int) -> None:
         (20, 7),   # MIN_BATCH_LEN edge
         (199, 12),
         (40, 4),
+        (1000, 12),  # long: hurst fits 7+ block sizes, where a stacked-RHS
+        (5000, 7),  # polyfit drifted from the per-row fit in the last bit
     ],
 )
 def test_feature_matrix_bit_equal(n: int, s: int) -> None:
@@ -87,21 +89,25 @@ def test_even_length_quirk_span() -> None:
                 assert (a, b) == (valid[0], valid[-1] + 1), (n, w)
 
 
-def test_chunked_equals_unchunked() -> None:
-    """feature_matrix splits big batches into cache-resident row
-    chunks — the split must be invisible in the values (rows are
-    independent) and must still bit-match the scalar path."""
+def test_chunked_equals_unchunked(monkeypatch) -> None:
+    """The feature fabric splits big groups into cache-resident row
+    blocks (functions/dispatch.py) — the split must be invisible in the
+    values (rows are independent) and must still bit-match the scalar
+    path."""
+    import pandas as pd
+
+    from fforma_spark.functions import dispatch as D
+    from fforma_spark.functions.features import _feature_batches
+
     rng = np.random.default_rng(42)
     X = _mixed_rows(rng, 25, 80, 7)
-    whole = BK._feature_matrix_block(X, 7)
-    old = BK.CHUNK_ELEMS
-    BK.CHUNK_ELEMS = 80 * 7  # 7-row chunks -> 4 blocks
-    try:
-        chunked = BK.feature_matrix(X, 7)
-    finally:
-        BK.CHUNK_ELEMS = old
+    whole = BK.feature_matrix(X, 7)
+    monkeypatch.setattr(D, "CACHE_ELEMS", 80 * 7)  # 7-row blocks -> 4
+    ids = [f"D{i}" for i in range(25)]  # "D" prefix: seasonality 7
+    pdf = pd.DataFrame({"doc_id": ids, "tokens": list(X)})
+    chunked = next(_feature_batches(iter([pdf]), 1))
     for name in K.FEATURE_NAMES:
-        a, b = chunked[name], whole[name]
+        a, b = chunked[name].to_numpy(), whole[name]
         same = (a == b) | (np.isnan(a) & np.isnan(b))
         assert same.all(), name
     _assert_bit_equal(X, 7)

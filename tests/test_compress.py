@@ -85,20 +85,16 @@ def test_dod_matrix_bitwise_parity():
                 assert np.array_equal(dod_decode(got[r]), X[r])
 
 
-def test_dod_matrix_chunking_exact():
-    """Row-chunked encode (budget forces multiple blocks) is identical
-    to one-shot — rows are independent."""
-    import fforma_spark.functions.compress as C
+def test_dod_matrix_chunking_exact(monkeypatch):
+    """Row-blocked encode (the dispatcher's budget forces multiple
+    blocks) is identical to one-shot — rows are independent."""
+    from fforma_spark.functions import dispatch as D
 
     rng = np.random.default_rng(11)
     X = rng.integers(0, 1000, size=(64, 40)).astype(np.int64)
     whole = dod_encode_matrix(X)
-    old = C._ENC_CHUNK_ELEMS
-    try:
-        C._ENC_CHUNK_ELEMS = 200  # 5 rows per block
-        chunked = dod_encode_matrix(X)
-    finally:
-        C._ENC_CHUNK_ELEMS = old
+    monkeypatch.setattr(D, "CACHE_ELEMS", 200)  # 5 rows per block
+    chunked = dod_encode_series(list(X))
     assert chunked == whole
 
 

@@ -252,3 +252,66 @@ def test_optimize_alpha_ragged_pod_packing_whale():
         assert np.array_equal(al, want), Y.shape
     # whale row: spot-check against the scalar search
     assert got[-1][0] == K.optimize_alpha(Ys[-1][0])
+
+
+def _frame(it) -> pd.DataFrame:
+    return pd.concat(list(it), ignore_index=True)
+
+
+def test_pooling_is_invisible(monkeypatch):
+    """The fabric pools Arrow batches (functions/dispatch.py): the same
+    docs fed as two batches or as one give the identical frame — same
+    rows, same order, same bits — whether the pools merge the batches
+    or split them at other boundaries."""
+    from fforma_spark.functions import dispatch as D
+
+    rng = np.random.default_rng(20)
+    ids, toks = [], []
+    for i, pfx in enumerate((["1", "2", "M", "Q"] * 40)):
+        n = int(rng.integers(HORIZON_BY_PREFIX.get(pfx, 8) + 1, 70))
+        toks.append(rng.integers(0 if i % 5 == 0 else 1, 9, size=n))
+        ids.append(f"{pfx}{i}")
+    pdf = pd.DataFrame({"doc_id": ids, "tokens": toks})
+    one = _frame(_forecast_batches(iter([pdf]), HORIZON_BY_PREFIX, 8))
+    halves = [pdf.iloc[:70], pdf.iloc[70:].reset_index(drop=True)]
+    for pool_rows in (D.POOL_ROWS, 45):
+        monkeypatch.setattr(D, "POOL_ROWS", pool_rows)
+        two = _frame(_forecast_batches(iter(halves), HORIZON_BY_PREFIX, 8))
+        pd.testing.assert_frame_equal(two, one, check_exact=True)
+    pd.testing.assert_frame_equal(one, _reference_rows(pdf), check_exact=True)
+
+
+def test_whale_group_memory_bounded(monkeypatch):
+    """One strictly-positive group of 200 docs x 10k train points. The
+    unbounded TSB kernel built a (200, 7, 10k) cube plus a shifted copy
+    in one call: a 515 MiB traced peak. Under the dispatcher's memory
+    cap the group runs in 57-row blocks (169 MiB measured), so the
+    bound below sits well under the unbounded peak and well over the
+    blocked one. Blocking must not change a bit of the output."""
+    import tracemalloc
+
+    from fforma_spark.functions import dispatch as D
+
+    rng = np.random.default_rng(21)
+    pdf = pd.DataFrame(
+        {
+            "doc_id": [f"{i % 10}{i}" for i in range(200)],
+            "tokens": [
+                rng.integers(1, 50, size=10_008).astype(np.int32)
+                for _ in range(200)
+            ],
+        }
+    )
+    tracemalloc.start()
+    try:
+        got = _frame(_forecast_batches(iter([pdf]), HORIZON_BY_PREFIX, 8))
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 256 * 2**20, f"traced peak {peak / 2**20:.0f} MiB"
+    monkeypatch.setattr(D, "MEMORY_ELEMS", 10**12)  # one block
+    whole = _frame(_forecast_batches(iter([pdf]), HORIZON_BY_PREFIX, 8))
+    assert got["doc_id"].tolist() == whole["doc_id"].tolist()
+    for c in ["pos", *FORECAST_COLS]:
+        a, b = got[c].to_numpy(), whole[c].to_numpy()
+        assert ((a == b) | (np.isnan(a) & np.isnan(b))).all(), c
