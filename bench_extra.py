@@ -8,9 +8,11 @@ and capture formatted plans, without perturbing the frozen harness.
 Usage:
     SPARK_GRAFT_SF_DIR=/root/testdata/sf1.0 python bench_extra.py [--plans DIR]
 
-Prints one JSON line: {"queries": {name: best_sec}, "rep_times": {...},
-"sf": ...}. With --plans DIR, writes DIR/<name>.txt containing
-explain("formatted") for each query.
+Runs on the session ``get_spark`` sizes from the host
+(local[$SPARK_GRAFT_CPUS], else every core it may run on). Prints one
+JSON line: {"queries": {name: best_sec}, "rep_times": {...}, "sf": ...,
+"cpus": <cores the session ran on>}. With --plans DIR, writes
+DIR/<name>.txt containing explain("formatted") for each query.
 """
 
 from __future__ import annotations
@@ -21,7 +23,6 @@ import sys
 import time
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 REPS = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
 
 
@@ -52,7 +53,8 @@ def main() -> None:
         plans_dir = sys.argv[sys.argv.index("--plans") + 1]
         os.makedirs(plans_dir, exist_ok=True)
 
-    spark = get_spark("fforma_spark_bench_extra", master=f"local[{CPUS}]")
+    spark = get_spark("fforma_spark_bench_extra")
+    cpus = spark.sparkContext.defaultParallelism
     warm_python_workers(spark)
     panel = panel_from_events(spark, SF_DIR).cache()
     seq = sequences_from_documents(spark, SF_DIR).cache()
@@ -102,7 +104,7 @@ def main() -> None:
         spark.sparkContext.setJobDescription(None)
     spark.stop()
     print(json.dumps({"queries": timings, "rep_times": reps, "sf": SF_DIR,
-                      "cpus": CPUS, "wall": round(time.time(), 1)}))
+                      "cpus": cpus, "wall": round(time.time(), 1)}))
 
 
 if __name__ == "__main__":

@@ -235,7 +235,8 @@ def lsh_candidate_pairs(sigs: DataFrame, r: int = 1) -> DataFrame:
     Band keys for r=2 pack two mod-MOD hashes into one int64
     (mh_i·MOD + mh_{i+1} < 2^60), identically in the DuckDB twin.
     """
-    assert P % r == 0, "P must be divisible by r"
+    if r < 1 or P % r:
+        raise ValueError(f"rows per band r={r} must divide P={P}")
     if r == 1:
         keys = [F.col(f"mh_{i}") for i in range(P)]
     else:

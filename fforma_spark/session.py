@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import PySparkRuntimeError
 from pyspark.sql import SparkSession
 
 
@@ -52,6 +53,24 @@ def driver_mem() -> str:
     return os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem()
 
 
+def driver_jvm_conf(mem: str) -> dict[str, str]:
+    """The local-mode driver JVM's settings for a heap of ``mem``, read
+    by :func:`get_spark` and by the scaling bench's spark-submit legs.
+
+    Single-JVM local mode: many task threads contend on the process
+    mmap_lock (measured: threads stuck in lock_mm_and_find_vma/
+    __vm_munmap during shuffles). Fixed, pre-touched heap + ParallelGC
+    (never uncommits regions) + no shuffle-block mmap removes the
+    mmap/munmap churn. Irrelevant-but-harmless on a real cluster
+    (executor JVMs are sized with Xms=Xmx there anyway).
+    """
+    return {
+        "spark.driver.extraJavaOptions":
+            f"-Xms{mem} -XX:+AlwaysPreTouch -XX:+UseParallelGC",
+        "spark.storage.memoryMapThreshold": "2g",
+    }
+
+
 def get_spark(
     app_name: str = "fforma_spark",
     master: str | None = None,
@@ -65,7 +84,8 @@ def get_spark(
     defaults to ``local[$SPARK_GRAFT_CPUS]``. Explicit arguments
     override both. Unset, ``SPARK_GRAFT_CPUS`` is the number of cores
     this process may run on and ``SPARK_GRAFT_DRIVER_MEM`` is
-    :func:`_default_driver_mem`.
+    :func:`_default_driver_mem`. A driver JVM that cannot start raises
+    ``RuntimeError`` naming the heap it was asked for.
     """
     cpus = int(
         os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
@@ -82,18 +102,6 @@ def get_spark(
     mem = driver_mem()
     builder = (
         SparkSession.builder.appName(app_name)
-        # Single-JVM local mode: many task threads contend on the
-        # process mmap_lock (measured: threads stuck in
-        # lock_mm_and_find_vma/__vm_munmap during shuffles). Fixed,
-        # pre-touched heap + ParallelGC (never uncommits regions) +
-        # no shuffle-block mmap removes the mmap/munmap churn.
-        # Irrelevant-but-harmless on a real cluster (executor JVMs are
-        # sized with Xms=Xmx there anyway).
-        .config(
-            "spark.driver.extraJavaOptions",
-            f"-Xms{mem} -XX:+AlwaysPreTouch -XX:+UseParallelGC",
-        )
-        .config("spark.storage.memoryMapThreshold", "2g")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -114,9 +122,18 @@ def get_spark(
         builder = builder.config(
             "spark.sql.shuffle.partitions", str(shuffle_partitions)
         )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**driver_jvm_conf(mem), **(extra_conf or {})}.items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    try:
+        spark = builder.getOrCreate()
+    except PySparkRuntimeError as exc:
+        if exc.getCondition() != "JAVA_GATEWAY_EXITED":
+            raise
+        raise RuntimeError(
+            "the driver JVM exited at start-up; it was asked for a "
+            f"pre-touched heap of -Xms{mem}. Set SPARK_GRAFT_DRIVER_MEM "
+            "to a heap size this host can reserve (e.g. 2g)."
+        ) from exc
     if shuffle_partitions is not None:
         # explicit request on a possibly-reused session: the builder
         # config above landed in the runtime conf; clear the auto

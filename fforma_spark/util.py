@@ -105,7 +105,10 @@ def ensure_parallelism(df, min_parts: int | None = None):
     """
     from pyspark.sql import DataFrame
 
-    assert isinstance(df, DataFrame)
+    if not isinstance(df, DataFrame):
+        raise TypeError(
+            f"ensure_parallelism needs a DataFrame, got {type(df).__name__}"
+        )
     target = min_parts or df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)

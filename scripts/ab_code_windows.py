@@ -19,55 +19,28 @@ Usage:
   git archive <old-rev> fforma_spark | (cd /tmp/abdir && tar x)
   cd /tmp/abdir && zip -qr /tmp/old.zip fforma_spark
   python scripts/ab_code_windows.py --a /tmp/old.zip --a-tag r4 \
-      --b /tmp/new.zip --b-tag r5 --cpus 32 --reps 2
+      --b /tmp/new.zip --b-tag r5 --reps 2
 """
 from __future__ import annotations
 
 import argparse
 import json
-import os
 import subprocess
-import sys
 import time
 
-import pyspark
-
-SUBMIT = os.path.join(os.path.dirname(pyspark.__file__), "bin", "spark-submit")
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+from bench_scaling import run_leg
+from host_calibration import ladder
 
 
 def leg(zip_path: str, cpus: int, tag: str, seq: str, scratch: str,
         job_args: list[str]) -> dict:
     out = f"{scratch}/ab_tiers_{tag}_{cpus}"
     subprocess.run(["rm", "-rf", out], check=False)
-    env = dict(os.environ)
-    env["SPARK_GRAFT_CPUS"] = str(cpus)
-    sys.path.insert(0, REPO)
-    from fforma_spark.session import driver_mem
-
-    mem = driver_mem()  # the heap get_spark would size on this host
-    cmd = [
-        SUBMIT, "--master", f"local[{cpus}]",
-        "--conf", f"spark.local.dir={scratch}/spark_ab",
-        "--driver-memory", mem,
-        "--conf", (f"spark.driver.extraJavaOptions=-Xms{mem} "
-                   "-XX:+AlwaysPreTouch -XX:+UseParallelGC"),
-        "--conf", "spark.storage.memoryMapThreshold=2g",
-        "--py-files", zip_path,
-        os.path.join(REPO, "jobs", "build_tiers.py"),
-        "--input", seq, "--output", out, *job_args,
-    ]
-    t0 = time.time()
-    p = subprocess.run(cmd, capture_output=True, text=True, env=env,
-                       cwd="/tmp")
-    wall = time.time() - t0
-    line = next((ln for ln in reversed(p.stdout.strip().splitlines())
-                 if ln.strip().startswith("{")), None)
-    if p.returncode != 0 or line is None:
-        sys.stderr.write(p.stderr[-3000:])
-        raise SystemExit(f"leg failed {tag}")
-    d = json.loads(line)
-    row = {"tag": tag, "cpus": cpus, "wall": round(wall, 1),
+    # cwd outside the repo so the tree cannot shadow the zip
+    d = run_leg("jobs/build_tiers.py",
+                ["--input", seq, "--output", out, *job_args], cpus,
+                scratch=scratch, zip_path=zip_path, cwd="/tmp")
+    row = {"tag": tag, "cpus": cpus, "wall": round(d["_leg_wall_sec"], 1),
            "value": d["value"],
            "ladder": d["phases"]["ladder_sec"]}
     if "compress" in d:
@@ -83,7 +56,7 @@ def main() -> None:
     ap.add_argument("--a-tag", default="a")
     ap.add_argument("--b", required=True, help="second code zip")
     ap.add_argument("--b-tag", default="b")
-    ap.add_argument("--cpus", type=int, default=32)
+    ap.add_argument("--cpus", type=int, default=ladder()[1])
     ap.add_argument("--reps", type=int, default=2)
     ap.add_argument("--seq", default="/dev/shm/bench/bench_seq_1000000")
     ap.add_argument("--scratch", default="/dev/shm/bench")

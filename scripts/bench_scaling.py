@@ -1,9 +1,10 @@
-"""Two-cluster-size scaling bench (north_rule evidence; rounds 4-5).
+"""Two-parallelism-level scaling bench: the repo's one scaling harness.
 
-Same protocol as round 3 (identical stored parquet inputs, fresh JVM
-per leg via spark-submit --py-files — the production invocation,
-local[8] then local[32], 20 s cooldown) with the round-3 VERDICT #7
-fixes:
+Each phase runs over identical stored parquet inputs, fresh JVM per leg
+via spark-submit --py-files (the production invocation), local[lo] then
+local[hi] with a 20 s cooldown. The levels default to the host ladder
+(``host_calibration.ladder``: cores/4 → cores, e.g. 1→4 on a 4-core
+host, 8→32 on a 32-core one); efficiency = (t_lo/t_hi)/(hi/lo). Further:
 
 * per-op timings are best-of-2 WITHIN the shared leg JVM (--reps 2) so
   each op's number measures steady-state parallel work, not first-run
@@ -20,6 +21,7 @@ dedup1m (exact + minhash r2 + ngram index), dedup50k (minhash r1 +
 simhash64 Hamming), ann1m (brute/LSH/IVF + 1-Lloyd, recall@k).
 
 Usage: python scripts/bench_scaling.py [--skip tiers,...] [--out F]
+       [--levels lo,hi] [--probe-gate]
 NOTE: run nothing else on the box while timed legs run — CPU
 contention corrupts the efficiency evidence.
 """
@@ -33,8 +35,12 @@ import subprocess
 import sys
 import time
 
+import host_calibration
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 ZIP = "/tmp/fforma_spark_bench.zip"
+sys.path.insert(0, REPO)
+from fforma_spark.session import driver_jvm_conf, driver_mem  # noqa: E402
 
 
 def _submit_bin() -> str:
@@ -43,14 +49,14 @@ def _submit_bin() -> str:
     return os.path.join(os.path.dirname(pyspark.__file__), "bin", "spark-submit")
 
 
-def _run_leg(
-    job: str, extra: list[str], cpus: int, scratch: str = "/tmp"
+def run_leg(
+    job: str, extra: list[str], cpus: int, scratch: str = "/tmp",
+    zip_path: str = ZIP, cwd: str = REPO,
 ) -> dict:
+    """One leg: ``job`` in a fresh spark-submit JVM at local[cpus] with
+    the code in ``zip_path``; its last JSON line plus ``_leg_wall_sec``."""
     env = dict(os.environ)
     env["SPARK_GRAFT_CPUS"] = str(cpus)
-    sys.path.insert(0, REPO)
-    from fforma_spark.session import driver_mem
-
     mem = driver_mem()  # the heap get_spark would size on this host
     cmd = [
         _submit_bin(),
@@ -65,25 +71,17 @@ def _run_leg(
         "--conf",
         f"spark.local.dir={scratch}/spark_local_{cpus}",
         # single-JVM local mode: the driver heap IS the executor heap —
-        # mirror fforma_spark.session.get_spark's tuned local-mode JVM
-        # (fixed pre-touched heap, ParallelGC, no shuffle-block mmap);
-        # without it the 32-thread leg loses ~2x to mmap_lock
-        # contention, corrupting the scaling measurement.
+        # run get_spark's tuned local-mode JVM; without it the 32-thread
+        # leg lost ~2x to mmap_lock contention
         "--driver-memory",
         mem,
-        "--conf",
-        "spark.driver.extraJavaOptions="
-        f"-Xms{mem} -XX:+AlwaysPreTouch -XX:+UseParallelGC",
-        "--conf",
-        "spark.storage.memoryMapThreshold=2g",
-        "--py-files",
-        ZIP,
-        os.path.join(REPO, job),
-        *extra,
     ]
+    for key, value in driver_jvm_conf(mem).items():
+        cmd += ["--conf", f"{key}={value}"]
+    cmd += ["--py-files", zip_path, os.path.join(REPO, job), *extra]
     t0 = time.time()
     proc = subprocess.run(
-        cmd, capture_output=True, text=True, env=env, cwd=REPO, check=False
+        cmd, capture_output=True, text=True, env=env, cwd=cwd, check=False
     )
     wall = round(time.time() - t0, 3)
     line = None
@@ -100,24 +98,20 @@ def _run_leg(
     return parsed
 
 
-def _store(job: str, extra: list[str], scratch: str = "/tmp") -> None:
-    out = _run_leg(job, extra, cpus=32, scratch=scratch)
-    print(json.dumps(out), flush=True)
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--out", default=os.path.join(REPO, "BENCH_SCALING_r5.json"))
     ap.add_argument("--skip", default="")
     ap.add_argument("--trials", type=int, default=1,
                     help="fresh-JVM trials per (phase, level); best kept")
-    ap.add_argument("--levels", default="8,32",
+    ap.add_argument("--levels", default=None,
                     help="two parallelism levels lo,hi (N vs (hi/lo)·N "
-                    "executors proxy); efficiency = (t_lo/t_hi)/(hi/lo)")
+                    "executors proxy), default the host ladder "
+                    "cores/4,cores; efficiency = (t_lo/t_hi)/(hi/lo)")
     ap.add_argument("--phase-suffix", default="",
                     help="suffix phase keys in the output (e.g. "
                     "_below_knee) so extra level pairs merge instead of "
-                    "overwriting the 8/32 rows")
+                    "overwriting the default ladder's rows")
     ap.add_argument("--scratch", default="/tmp",
                     help="dir for stored inputs, tier outputs and "
                     "spark.local.dir (use /dev/shm to take the sandbox's "
@@ -127,8 +121,8 @@ def main() -> None:
                     help="merge into an existing --out file instead of "
                     "overwriting it")
     ap.add_argument("--probe-gate", action="store_true",
-                    help="bracket each phase with host_calibration "
-                    "--batched: wait for an in-band pre-probe, rerun a "
+                    help="bracket each phase with host_calibration."
+                    "probe: wait for an in-band pre-probe, rerun a "
                     "phase whose post-probe lands out of band OR whose "
                     "hi leg came out slower than its lo leg (physically "
                     "impossible for these embarrassingly-parallel phases "
@@ -145,6 +139,11 @@ def main() -> None:
     ap.add_argument("--seq1m", type=int, default=1_000_000)
     args = ap.parse_args()
     skip = set(args.skip.split(",")) if args.skip else set()
+    lo_c, hi_c = (
+        tuple(int(x) for x in args.levels.split(","))
+        if args.levels else host_calibration.ladder()
+    )
+    ratio = hi_c / lo_c
 
     subprocess.run(["rm", "-f", ZIP], check=False)
     subprocess.run(["zip", "-qr", ZIP, "fforma_spark"], cwd=REPO, check=True)
@@ -157,23 +156,22 @@ def main() -> None:
         "emb1m": f"{sc}/bench_emb_{args.vecs1m}",
         "seq1m": f"{sc}/bench_seq_{args.seq1m}",
     }
-    if not os.path.exists(stores["docs1m"]) and "dedup1m" not in skip:
-        _store("jobs/dedup_pipeline.py",
-               ["--synth", str(args.docs1m), "--store", stores["docs1m"]],
-               scratch=sc)
-    if not os.path.exists(stores["docs50k"]) and "dedup50k" not in skip:
-        _store("jobs/dedup_pipeline.py",
-               ["--synth", str(args.docs50k), "--store", stores["docs50k"]],
-               scratch=sc)
+    # each stored input is written once, at the hi level, by the job
+    # that reads it: (store, phases that read it, job, synth size, flag)
     emb_phases = {"ann1m", "lsh1m_q512", "lsh1m_q4096", "neardup100k"}
-    if not os.path.exists(stores["emb1m"]) and emb_phases - skip:
-        _store("jobs/ann_pipeline.py",
-               ["--synth", str(args.vecs1m), "--store", stores["emb1m"]],
-               scratch=sc)
-    if not os.path.exists(stores["seq1m"]) and "tiers" not in skip:
-        _store("jobs/build_tiers.py",
-               ["--synth", str(args.seq1m), "--store-input", stores["seq1m"]],
-               scratch=sc)
+    for key, readers, job, n, flag in (
+        ("docs1m", {"dedup1m"}, "jobs/dedup_pipeline.py", args.docs1m,
+         "--store"),
+        ("docs50k", {"dedup50k"}, "jobs/dedup_pipeline.py", args.docs50k,
+         "--store"),
+        ("emb1m", emb_phases, "jobs/ann_pipeline.py", args.vecs1m, "--store"),
+        ("seq1m", {"tiers"}, "jobs/build_tiers.py", args.seq1m,
+         "--store-input"),
+    ):
+        if not os.path.exists(stores[key]) and readers - skip:
+            leg = run_leg(job, ["--synth", str(n), flag, stores[key]], hi_c,
+                          scratch=sc)
+            print(json.dumps(leg), flush=True)
 
     phases = {
         "tiers": (
@@ -233,26 +231,6 @@ def main() -> None:
         ),
     }
 
-    lo_c, hi_c = (int(x) for x in args.levels.split(","))
-    ratio = hi_c / lo_c
-
-    def probe() -> dict:
-        """host_calibration --batched bracket (round-4 protocol, now
-        built in): in-band means the plain-process 8→32 throughput
-        ratio sits in the clean-window band; out-of-band marks the
-        phase it brackets as contended."""
-        proc = subprocess.run(
-            [sys.executable,
-             os.path.join(REPO, "scripts", "host_calibration.py"),
-             "--batched"],
-            capture_output=True, text=True, check=True,
-        )
-        full = json.loads(proc.stdout.strip().splitlines()[-1])
-        r = full["throughput_speedup_8_to_32"]
-        band = tuple(float(x) for x in os.environ.get(
-            "SPARK_GRAFT_PROBE_BAND", "2.55,3.7").split(","))
-        return {"ratio": r, "in_band": band[0] <= r <= band[1],
-                "band": list(band)}
     result: dict = {
         "protocol": "identical stored input per phase, fresh JVM per leg "
         "(spark-submit --py-files), local[lo] then local[hi], 20 s cooldown "
@@ -307,7 +285,7 @@ def main() -> None:
                             f"{sc}/bench_tiers_r5{args.phase_suffix}_{cpus}"
                         )
                         subprocess.run(["rm", "-rf", out_dir], check=False)
-                    leg = _run_leg(job, leg_extra, cpus, scratch=sc)
+                    leg = run_leg(job, leg_extra, cpus, scratch=sc)
                     print(f"{name} local[{cpus}] trial {t + 1}: "
                           f"{leg.get('value')}s "
                           f"(leg wall {leg['_leg_wall_sec']}s)", flush=True)
@@ -324,15 +302,15 @@ def main() -> None:
                         )
                     time.sleep(20)
                 detail[str(cpus)] = best
-            t8, t32 = detail[str(lo_c)]["value"], detail[str(hi_c)]["value"]
+            t_lo, t_hi = detail[str(lo_c)]["value"], detail[str(hi_c)]["value"]
             phase: dict = {
-                f"local{lo_c}_sec": t8,
-                f"local{hi_c}_sec": t32,
+                f"local{lo_c}_sec": t_lo,
+                f"local{hi_c}_sec": t_hi,
                 f"speedup_{lo_c}_to_{hi_c}": (
-                    round(t8 / t32, 3) if t32 else None
+                    round(t_lo / t_hi, 3) if t_hi else None
                 ),
                 "scaling_efficiency": (
-                    round(t8 / t32 / ratio, 3) if t32 else None
+                    round(t_lo / t_hi / ratio, 3) if t_hi else None
                 ),
                 # JVM startup + input count + py-worker warmup only
                 "floor_sec": {
@@ -340,12 +318,12 @@ def main() -> None:
                 },
                 "detail": detail,
             }
-            ops8 = detail[str(lo_c)].get("ops")
-            ops32 = detail[str(hi_c)].get("ops")
-            if ops8 and ops32:
+            ops_lo = detail[str(lo_c)].get("ops")
+            ops_hi = detail[str(hi_c)].get("ops")
+            if ops_lo and ops_hi:
                 per_op = {}
-                for op in ops8:
-                    a, b = ops8[op]["sec"], ops32[op].get("sec")
+                for op in ops_lo:
+                    a, b = ops_lo[op]["sec"], ops_hi[op].get("sec")
                     if b:
                         per_op[op] = {
                             f"local{lo_c}_sec": a,
@@ -371,16 +349,16 @@ def main() -> None:
             phase = None
             discarded: list[dict] = []
             for attempt in range(args.max_attempts):
-                pre = probe()
+                pre = host_calibration.probe()
                 waits = 0
                 while not pre["in_band"] and waits < 10:
-                    print(f"{name}: pre-probe {pre['ratio']} out of band, "
-                          "waiting 60 s", flush=True)
+                    print(f"{name}: pre-probe {pre.get('efficiency')} out "
+                          "of band, waiting 60 s", flush=True)
                     time.sleep(60)
-                    pre = probe()
+                    pre = host_calibration.probe()
                     waits += 1
                 cand = run_phase()
-                post = probe()
+                post = host_calibration.probe()
                 speedup = cand[f"speedup_{lo_c}_to_{hi_c}"]
                 sane = speedup is not None and speedup >= 1.0
                 cand["probe_bracket"] = {
@@ -394,7 +372,7 @@ def main() -> None:
                     break
                 why = ("hi leg slower than lo leg"
                        if not sane else
-                       f"post-probe {post['ratio']} out of band")
+                       f"post-probe {post.get('efficiency')} out of band")
                 print(f"{name}: {why} — discarding attempt, retrying",
                       flush=True)
                 discarded.append(

@@ -4,8 +4,11 @@ import in this container for parity testing."""
 
 from __future__ import annotations
 
+import importlib.util
 import sys
 import types
+
+import pytest
 
 
 def install_reference_stubs() -> None:
@@ -66,3 +69,12 @@ def install_reference_stubs() -> None:
     fake_module("rpy2.robjects.vectors", IntVector=object, FloatVector=object)
     if "/root/reference" not in sys.path:
         sys.path.insert(0, "/root/reference")
+    if importlib.util.find_spec("fforma") is None:
+        # name the checkout put on sys.path just above
+        checkout = next(p for p in sys.path if p.endswith("reference"))
+        pytest.fail(
+            f"reference checkout missing: no package 'fforma' under "
+            f"{checkout}; these parity tests import the reference "
+            "implementation's own code from that checkout",
+            pytrace=False,
+        )

@@ -768,3 +768,12 @@ def test_embedding_neardup_lsh_subset_and_recall(spark):
         for r in S.embedding_neardup_lsh(df, 0.99, 8, 8, 0).collect()
     }
     assert planted <= found, planted - found
+
+
+def test_lsh_band_width_must_divide_signature():
+    """r rows per band must divide the P-hash signature; anything else
+    raises (not an assert, which python -O strips) before any plan is
+    built."""
+    for r in (0, 3, D.P + 1):
+        with pytest.raises(ValueError, match="must divide"):
+            D.lsh_candidate_pairs(None, r=r)

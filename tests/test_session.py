@@ -10,6 +10,8 @@ import os
 import subprocess
 import sys
 
+import pytest
+
 import fforma_spark.session as session
 from fforma_spark.session import _default_shuffle_partitions
 
@@ -98,6 +100,33 @@ def test_session_sized_from_host_when_env_unset():
     assert got["spark.driver.extraJavaOptions"] == (
         "-Xms6g -XX:+AlwaysPreTouch -XX:+UseParallelGC"
     )
+
+
+def test_jvm_start_failure_names_the_heap():
+    """A driver JVM that cannot start fails fast with an error naming
+    the -Xms heap it asked for and SPARK_GRAFT_DRIVER_MEM, instead of
+    PySpark's bare JAVA_GATEWAY_EXITED. An invalid size string makes the
+    JVM exit before it reserves any memory."""
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="not-a-size",
+               SPARK_GRAFT_CPUS="1")
+    env.pop("PYSPARK_GATEWAY_PORT", None)
+    out = subprocess.run(
+        [sys.executable, "-c",
+         "from fforma_spark.session import get_spark; get_spark('jvm')"],
+        capture_output=True, text=True, env=env, timeout=300,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    )
+    assert out.returncode != 0
+    last = out.stderr.strip().splitlines()[-1]
+    assert last.startswith("RuntimeError:"), last
+    assert "-Xmsnot-a-size" in last and "SPARK_GRAFT_DRIVER_MEM" in last
+
+
+def test_ensure_parallelism_rejects_non_dataframes():
+    from fforma_spark.util import ensure_parallelism
+
+    with pytest.raises(TypeError, match="needs a DataFrame, got list"):
+        ensure_parallelism([1, 2, 3])
 
 
 def test_default_driver_mem_is_a_clamped_quarter(monkeypatch):
